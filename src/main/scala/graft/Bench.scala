@@ -4,6 +4,7 @@ import guards.QualityPipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import pipeline.{Sessions, SynthStore}
+import scala.util.Try
 
 /** Benchmark main (driver contract): one JSON line with per-query seconds.
   *
@@ -32,7 +33,7 @@ object Bench {
   /** Healthy per-query reference seconds at the official config (sf0.1,
     * 32 cpus), from the healthy committed sweeps (BENCH_r02/r04) and the
     * judge-verified warm medians — deliberately skewed HIGH (in-sweep runs
-    * are colder than warm QueryPerf medians), so a rerun only triggers on
+    * are colder than warm medians), so a rerun only triggers on
     * a genuine multiple. Unlisted queries (sub-second almost all) use
     * `DefaultRefSec`. At smaller fixture tiers everything runs far below
     * these, so the rerun logic is simply inert.
@@ -82,13 +83,16 @@ object Bench {
     * machine every sweep would double-run and self-mark degraded, and on a
     * much faster host the gate would be dead. The reference actually used
     * is recorded in the emitted JSON (`calib_ref_sec`) so degraded
-    * classifications stay interpretable off-host.
+    * classifications stay interpretable off-host. A value that is not a
+    * positive finite number stops the run before the session starts.
     */
-  private val HealthyCalibSec =
-    sys.env.get("SPARK_GRAFT_CALIB_REF").map(_.toDouble).getOrElse(0.41)
+  private[graft] def parseCalibRef(value: Option[String]): Double =
+    value.fold(0.41) { v =>
+      Try(v.trim.toDouble).toOption.filter(d => d > 0 && !d.isInfinite)
+        .getOrElse(throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CALIB_REF must be a positive number of seconds, got '$v'"))
+    }
   private val DegradedCalibFactor = 1.5
-  private def isDegraded(calibMax: Double): Boolean =
-    calibMax > DegradedCalibFactor * HealthyCalibSec
 
   /** Everything one full bench sweep produces, bracketed by its own
     * host-health calibration.
@@ -122,14 +126,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val healthyCalibSec = parseCalibRef(sys.env.get("SPARK_GRAFT_CALIB_REF"))
+    def isDegraded(calibMax: Double): Boolean =
+      calibMax > DegradedCalibFactor * healthyCalibSec
+    val cpus = LocalSpark.envCpus
+    val spark = LocalSpark.session(cpus)
     Sessions.tune(spark)
 
     def runSweep(): Sweep = {
@@ -202,7 +203,7 @@ object Bench {
     val (sweep, attempts) =
       if (isDegraded(first.calibMax)) {
         System.err.println(f"BENCH HOST DEGRADED (calib ${first.calibMax}%.3f s" +
-          f" > ${DegradedCalibFactor * HealthyCalibSec}%.3f s): re-running sweep")
+          f" > ${DegradedCalibFactor * healthyCalibSec}%.3f s): re-running sweep")
         val second = runSweep()
         (if (second.calibMax <= first.calibMax) second else first, 2)
       } else (first, 1)
@@ -218,7 +219,7 @@ object Bench {
     // headline calibration = the WORSE of the kept sweep's two brackets: a
     // mid-sweep degradation episode must surface in the summary field, not
     // be masked by a healthy start
-    println(s"""{"metric":"total","value":${sweep.total},"unit":"sec","failed_queries":${sweep.nFailed},"queries":$qs,"reruns":$rr,"sf":"$sfDir","cpus":$cpus,"pipeline_turns_in":${sweep.turnsIn},"pipeline_turns_kept":${sweep.kept},"pipeline_cold_sec":${sweep.coldSec},"pipeline_sec":${sweep.steadySec},"turns_per_sec":$turnsPerSec,"host_calibration_sec":${sweep.calibMax},"host_calibration_pre_sec":${sweep.calibPre},"host_calibration_post_sec":${sweep.calibPost},"calib_ref_sec":$HealthyCalibSec,"degraded":$degraded,"sweep_attempts":$attempts}""")
+    println(s"""{"metric":"total","value":${sweep.total},"unit":"sec","failed_queries":${sweep.nFailed},"queries":$qs,"reruns":$rr,"sf":"$sfDir","cpus":$cpus,"pipeline_turns_in":${sweep.turnsIn},"pipeline_turns_kept":${sweep.kept},"pipeline_cold_sec":${sweep.coldSec},"pipeline_sec":${sweep.steadySec},"turns_per_sec":$turnsPerSec,"host_calibration_sec":${sweep.calibMax},"host_calibration_pre_sec":${sweep.calibPre},"host_calibration_post_sec":${sweep.calibPost},"calib_ref_sec":$healthyCalibSec,"degraded":$degraded,"sweep_attempts":$attempts}""")
     spark.stop()
   }
 }

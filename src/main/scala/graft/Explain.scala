@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import pipeline.Sessions
 
 /** Plan-inspection main: dumps `explain("formatted")` for the headline
@@ -14,13 +13,9 @@ object Explain {
     val names = if (args.length > 1) args.tail.toSeq
       else Seq("q_pipeline_labels", "q_join_bcast", "q_join_smj", "q_agg_pricing",
         "q_doc_rules", "q_window_rank")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // local[4] with 8 shuffle partitions: the shared test session's shape
+    val spark = LocalSpark.session(4)
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     Sessions.tune(spark)
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -1,7 +1,7 @@
 package graft
 
 import guards.QualityPipeline
-import org.apache.spark.sql.{SparkSession, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import pipeline.{Sessions, SynthStore}
 
@@ -22,13 +22,7 @@ object ScalingMain {
     * memory/cache-resident columnar scan the same way).
     */
   private def measure(cpus: Int, target: Long, reps: Int): (Long, Double, Double) = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(cpus)
     Sessions.tune(spark)
     val input = SynthStore(target).read(spark).toDF().persist()
     val turnsIn = input.count()
@@ -75,13 +69,7 @@ object ScalingMain {
       val Array(_, cpusS, turnsS, idxS, nS) = args.take(5)
       val reps = args.drop(5).headOption.map(_.toInt).getOrElse(2)
       val barrierDir = args.drop(6).headOption
-      val spark = SparkSession.builder()
-        .master(s"local[$cpusS]")
-        .config("spark.sql.shuffle.partitions", cpusS)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
+      val spark = LocalSpark.session(cpusS.toInt, logLevel = "ERROR")
       Sessions.tune(spark)
       import spark.implicits._
       val target = turnsS.toLong

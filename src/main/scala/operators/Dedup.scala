@@ -120,16 +120,32 @@ object Dedup {
     */
   def simhashKeysFor(docs: DataFrame): DataFrame = simhashKeys(docs)
 
+  /** Candidate-pair verification shared by every near-dup tier: each
+    * (doc_a, doc_b) pair re-joins both members' features from the
+    * two-column (id, feature) frame `features`, and the pairs whose
+    * similarity passes `keep` come back as (doc_a, doc_b, `simName`). The
+    * bucket shuffles before this carry only ids and band keys; features
+    * join in here, for candidate ids only.
+    */
+  private[operators] def verifyPairs(pairs: DataFrame, features: DataFrame,
+      simName: String, sim: (Column, Column) => Column,
+      keep: Column => Column): DataFrame =
+    pairs
+      .join(features.toDF("doc_a", "_f_a"), "doc_a")
+      .join(features.toDF("doc_b", "_f_b"), "doc_b")
+      .withColumn(simName, sim(col("_f_a"), col("_f_b")))
+      .filter(keep(col(simName)))
+      .select("doc_a", "doc_b", simName)
+
+  /** Exact shingle-Jaccard verification of candidate pairs. */
+  private def jaccardPairs(pairs: DataFrame, shingles: DataFrame,
+      tau: Double): DataFrame =
+    verifyPairs(pairs, shingles, "jaccard", jaccardUdf(_, _), _ >= tau)
+
   /** MinHash-LSH candidates verified with exact shingle Jaccard ≥ tau. */
-  def nearDuplicates(docs: DataFrame, tau: Double): DataFrame = {
-    val sh = docs.select(col("doc_id"), shinglesUdf(col("text")).as("sh"))
-    minhashCandidates(docs)
-      .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-      .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-      .withColumn("jaccard", jaccardUdf(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= tau)
-      .select("doc_a", "doc_b", "jaccard")
-  }
+  def nearDuplicates(docs: DataFrame, tau: Double): DataFrame =
+    jaccardPairs(minhashCandidates(docs),
+      docs.select(col("doc_id"), shinglesUdf(col("text"))), tau)
 
   /** SimHash near-dups: 64-bit fingerprints, candidates via 4×16-bit chunk
     * buckets (any pair within Hamming ≤ 3 of 64 bits shares ≥1 exact 16-bit
@@ -142,14 +158,9 @@ object Dedup {
     // maxHamming would silently lose pairs whose flips hit all four chunks
     require(maxHamming >= 0 && maxHamming <= 3,
       s"simhash candidate generation uses 4 chunks => maxHamming ≤ 3, got $maxHamming")
-    val sims = docs.select(col("doc_id"), simhashUdf(col("text")).as("sim"))
-    val cand = pairsFromKeys(simhashKeys(docs), maxBucket)
-    cand
-      .join(sims.select(col("doc_id").as("doc_a"), col("sim").as("sim_a")), "doc_a")
-      .join(sims.select(col("doc_id").as("doc_b"), col("sim").as("sim_b")), "doc_b")
-      .withColumn("hamming", bit_count(col("sim_a").bitwiseXOR(col("sim_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select("doc_a", "doc_b", "hamming")
+    verifyPairs(pairsFromKeys(simhashKeys(docs), maxBucket),
+      docs.select(col("doc_id"), simhashUdf(col("text"))), "hamming",
+      (a, b) => bit_count(a.bitwiseXOR(b)), _ <= maxHamming)
   }
 
   /** Winnowed-fingerprint duplicate groups (cheapest near-dup tier: one
@@ -691,13 +702,7 @@ object Dedup {
                 else histCandIds.hint("shuffle_hash"),
             Seq("doc_id"), "left_semi")
           .select(col("doc_id"), shinglesUdf(col("text")).as("sh")))
-      val verified = pairs
-        .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")),
-          "doc_a")
-        .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")),
-          "doc_b")
-        .filter(jaccardUdf(col("sh_a"), col("sh_b")) >= tau)
-        .select("doc_a", "doc_b")
+      val verified = jaccardPairs(pairs, sh, tau).select("doc_a", "doc_b")
       // CC localCheckpoints its result, so the caches can be released as
       // soon as the convergence loop has run
       val labels = connectedComponents(verified)

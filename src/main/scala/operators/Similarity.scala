@@ -286,13 +286,8 @@ object Similarity {
       tables: Int = Tables, bits: Int = Bits, dim: Int = 64): DataFrame = {
     val keyed = hyperplaneKeys(corpus, tables, bits, dim)
       .select(col("vec_id").as("doc_id"), col("band_key"))
-    val emb = corpus.select(col("vec_id"), col("embedding"))
-    Dedup.pairsFromKeys(keyed)
-      .join(emb.select(col("vec_id").as("doc_a"), col("embedding").as("emb_a")), "doc_a")
-      .join(emb.select(col("vec_id").as("doc_b"), col("embedding").as("emb_b")), "doc_b")
-      .withColumn("cos", cosUdf(col("emb_a"), col("emb_b")))
-      .filter(col("cos") >= tau)
-      .select("doc_a", "doc_b", "cos")
+    Dedup.verifyPairs(Dedup.pairsFromKeys(keyed),
+      corpus.select(col("vec_id"), col("embedding")), "cos", cosUdf(_, _), _ >= tau)
   }
 
   /** SemDeDup-style semantic dedup, end-to-end (the embedding analog of

@@ -22,4 +22,12 @@ object GraftSqlShim {
       rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
+
+  /** Block until every posted scheduler event has reached its listeners
+    * (`SparkContext.listenerBus` is `private[spark]`). Delivery is
+    * asynchronous, so a listener read right after an action can otherwise
+    * miss that action's last job and stage events.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }
