@@ -81,9 +81,9 @@ object QualityPipeline {
     */
   def scorePostWindow(withWin: DataFrame): DataFrame = {
     val scoredCols = Rules.withStats(withWin)
-      .withColumn("lang", ScoreFns.langIdLabel(col("_tn")))
-      .withColumn("lang_conf", ScoreFns.langIdConf(col("_tn")))
-      .withColumn("ppl", ScoreFns.bytePerplexity(col("_tn")))
+      .withColumn("lang", col("_s.lang"))
+      .withColumn("lang_conf", col("_s.lang_conf"))
+      .withColumn("ppl", col("_s.ppl"))
     val rules = Rules.all(
       col("text"), col("role"), col("tool"), col("turn_idx"),
       col("_rn"), col("_prev_idx"), col("_prev_role"),
@@ -95,11 +95,10 @@ object QualityPipeline {
       // filter(keep) consumer re-evaluate the whole rule-array expression
       // a second time (the filter predicate and the projected column each
       // inline it), while the bare OR over `violated` is cheap — the
-      // heavy scorer inputs are memoized per row
+      // scores struct is memoized per row (Scorers.score)
       .withColumn("keep", !rules.map(_.violated).reduce(_ || _))
-      .withColumn("scrubbed_text", ScoreFns.scrubText(col("_tn")))
-      .drop("_rn", "_prev_idx", "_prev_role")
-      .drop(Rules.StatCols: _*)
+      .withColumn("scrubbed_text", ScoreFns.scrubText(Rules.textN(col("text"))))
+      .drop("_rn", "_prev_idx", "_prev_role", "_s")
   }
 
   /** Zero-shuffle variant for conversation-clustered sources (SURVEY.md §5

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *
   * Expected input columns: text, role, tool, turn_idx plus window columns
   * `_rn`, `_prev_idx`, `_prev_role` (stable (conv_id, turn_idx, ts, role)
-  * order) and scoring columns `lang`, `lang_conf`, `ppl`.
+  * order) and the `_s` scores struct of `withStats`.
   */
 object Rules {
   import RuleSpec._
@@ -50,40 +50,29 @@ object Rules {
       .otherwise(array().cast("array<string>"))
   }
 
-  /** Stage 1 of the rule path: attach the text statistics as named columns
-    * computed by the one-pass codegen expression tier
-    * (core.TextStats.stats via guards.expr.TextStatField, memoized per
-    * row). CRITICAL for performance: expressing words/bigrams with Spark's
+  /** Stage 1 of the rule path: attach every per-turn score as ONE struct
+    * column `_s` (guards.expr.TurnScores over the null-normalized text:
+    * core.TextStats.stats, language ID and perplexity in one call).
+    * CRITICAL for performance: expressing words/bigrams with Spark's
     * lambda higher-order functions (transform/filter) is interpreted-only
     * (CodegenFallback) AND re-evaluates the whole split subtree per array
     * element — O(words²) regex work per row (measured: ~1000× slower).
     * The HOF formulation survives in wordsCol/bigramsCol for the
     * DuckDB-checkable queries and the semantic cross-check suite.
     */
-  def withStats(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import guards.expr.ScoreFns.textStat
-    val tn = textN(col("text"))
-    df.withColumn("_tn", tn)
-      .withColumn("_cp", textStat(col("_tn"), 0))
-      .withColumn("_nw", textStat(col("_tn"), 1))
-      .withColumn("_nbg", textStat(col("_tn"), 2))
-      .withColumn("_nbgd", textStat(col("_tn"), 3))
-      .withColumn("_sym", textStat(col("_tn"), 4))
-      .withColumn("_dig", textStat(col("_tn"), 5))
-  }
-
-  final val StatCols = Seq("_tn", "_cp", "_nw", "_nbg", "_nbgd", "_sym", "_dig")
+  def withStats(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    df.withColumn("_s", guards.expr.ScoreFns.turnScores(textN(col("text"))))
 
   /** The pinned rule set of SURVEY.md §3.3 as Column predicates over the
-    * materialized stat columns of `withStats` plus window/scoring columns.
+    * `_s` struct of `withStats` plus window/scoring columns.
     */
   def all(
       text: Column, role: Column, tool: Column, turnIdx: Column,
       rn: Column, prevIdx: Column, prevRole: Column,
       lang: Column, langConf: Column, ppl: Column): Seq[GuardRule] = {
-    val cp = col("_cp")
-    val nWords = col("_nw")
-    val nBg = col("_nbg")
+    val cp = col("_s.cp")
+    val nWords = col("_s.nw")
+    val nBg = col("_s.nbg")
     // the ratio divisions are guarded INSIDE the expression (zero
     // denominator → 0.0), not only by the rule preconditions: codegen
     // subexpression elimination may hoist a constraint shared between
@@ -93,13 +82,13 @@ object Rules {
     // exactly where the precondition is false, so every violated-verdict
     // is unchanged.
     val repRatio = lit(1.0) -
-      when(nBg > 0, col("_nbgd").cast("double") / nBg.cast("double"))
+      when(nBg > 0, col("_s.nbgd").cast("double") / nBg.cast("double"))
         .otherwise(lit(0.0))
     val symRatio =
-      when(cp > 0, col("_sym").cast("double") / cp.cast("double"))
+      when(cp > 0, col("_s.sym").cast("double") / cp.cast("double"))
         .otherwise(lit(0.0))
     val digRatio =
-      when(cp > 0, col("_dig").cast("double") / cp.cast("double"))
+      when(cp > 0, col("_s.dig").cast("double") / cp.cast("double"))
         .otherwise(lit(0.0))
     val t = lit(true)
 

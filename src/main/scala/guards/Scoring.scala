@@ -18,7 +18,7 @@ case class WinTurn(
   * deserialized once per task, then applied in a tight per-partition loop.
   * Semantics are shared with the oracle via core.OracleEvaluator.scoreOne —
   * equality with the codegen-expression tier is enforced by
-  * PipelineEquivalenceSpec. This tier exists for models too large or
+  * PipelineConformanceSpec. This tier exists for models too large or
   * stateful to embed statically (real fastText .bin in production); the
   * expression tier is the default hot path.
   */

@@ -3,7 +3,7 @@ package guards.expr
 import org.apache.spark.sql.{Column, GraftSqlShim}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, StringType}
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen-friendly Catalyst expressions for the scoring hot path
@@ -11,43 +11,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * Each generates a direct static call into guards.expr.Scorers, so scoring
   * stays inside the WholeStageCodegen row loop — no UDF boxing, no typed
   * serialization boundary. Null in → null out (callers feed the
-  * null-normalized `text_n`, so this path is cold).
+  * null-normalized text, so this path is cold).
   */
 abstract class ScorerExpression extends UnaryExpression {
   /** Fully-qualified static call template; %s = child code. */
   protected def callTemplate: String
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => callTemplate.format(c))
-}
-
-case class LangIdLabel(child: Expression) extends ScorerExpression {
-  override def dataType: DataType = StringType
-  override protected def callTemplate = "guards.expr.Scorers.langLabel(%s)"
-  override protected def nullSafeEval(input: Any): Any =
-    Scorers.langLabel(input.asInstanceOf[UTF8String])
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "langid_label"
-}
-
-case class LangIdConf(child: Expression) extends ScorerExpression {
-  override def dataType: DataType = DoubleType
-  override protected def callTemplate = "guards.expr.Scorers.langConf(%s)"
-  override protected def nullSafeEval(input: Any): Any =
-    Scorers.langConf(input.asInstanceOf[UTF8String])
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "langid_conf"
-}
-
-case class BytePerplexity(child: Expression) extends ScorerExpression {
-  override def dataType: DataType = DoubleType
-  override protected def callTemplate = "guards.expr.Scorers.ppl(%s)"
-  override protected def nullSafeEval(input: Any): Any =
-    Scorers.ppl(input.asInstanceOf[UTF8String])
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "byte_perplexity"
 }
 
 case class ScrubText(child: Expression) extends ScorerExpression {
@@ -60,18 +30,27 @@ case class ScrubText(child: Expression) extends ScorerExpression {
   override def prettyName: String = "scrub_text"
 }
 
-/** One field of the one-pass core.TextStats.stats (memoized per row; six
-  * of these share one stats computation). Field ids: 0=cp 1=nWords
-  * 2=nBigrams 3=nBigramsDistinct 4=symbols 5=digits.
+/** Every per-turn score the rules read, as one struct computed by one
+  * static call (`Scorers.score`): the six core.TextStats.stats counts, the
+  * language-ID label and confidence, and the byte-LM perplexity. Callers
+  * feed the null-normalized text, so every field is non-null.
   */
-case class TextStatField(child: Expression, field: Int) extends ScorerExpression {
-  override def dataType: DataType = IntegerType
-  override protected def callTemplate = s"guards.expr.Scorers.statField(%s, $field)"
+case class TurnScores(child: Expression) extends ScorerExpression {
+  override def dataType: DataType = TurnScores.Schema
+  override protected def callTemplate = "guards.expr.Scorers.score(%s)"
   override protected def nullSafeEval(input: Any): Any =
-    Scorers.statField(input.asInstanceOf[UTF8String], field)
+    Scorers.score(input.asInstanceOf[UTF8String])
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-  override def prettyName: String = s"text_stat_$field"
+  override def prettyName: String = "turn_scores"
+}
+
+object TurnScores {
+  final val Schema: StructType = StructType(
+    Seq("cp", "nw", "nbg", "nbgd", "sym", "dig").map(StructField(_, IntegerType, nullable = false)) ++
+      Seq(StructField("lang", StringType, nullable = false),
+        StructField("lang_conf", DoubleType, nullable = false),
+        StructField("ppl", DoubleType, nullable = false)))
 }
 
 /** pmod(pinned-Murmur3-32(conv_id), nParts) — the logical resume partition. */
@@ -90,10 +69,7 @@ object ScoreFns {
   private def c(e: Expression): Column = GraftSqlShim.column(e)
   private def e(col: Column): Expression = GraftSqlShim.expression(col)
 
-  def textStat(text: Column, field: Int): Column = c(TextStatField(e(text), field))
-  def langIdLabel(text: Column): Column = c(LangIdLabel(e(text)))
-  def langIdConf(text: Column): Column = c(LangIdConf(e(text)))
-  def bytePerplexity(text: Column): Column = c(BytePerplexity(e(text)))
+  def turnScores(text: Column): Column = c(TurnScores(e(text)))
   def scrubText(text: Column): Column = c(ScrubText(e(text)))
   def convPartId(convId: Column, nParts: Int): Column = c(ConvPartId(e(convId), nParts))
 }

@@ -1,6 +1,8 @@
 package guards.expr
 
 import core.{ByteLM, LangId, Murmur3, Scrub, TextStats}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Static scoring entry points called from generated code (the codegen
@@ -9,88 +11,40 @@ import org.apache.spark.unsafe.types.UTF8String
   * executor materializes an identical model with no broadcast traffic
   * (the broadcast variant lives in guards.Scoring for the
   * mapPartitions-batched tier).
-  *
-  * `langLabel`/`langConf` share one scoring pass per row via a thread-local
-  * memo keyed on a defensive copy of the input bytes (generated code may
-  * evaluate the two projections independently; UnsafeRow memory is reused
-  * across rows, hence the clone).
   */
 object Scorers {
-  // ---- shared per-row UTF8String→String decode: every scorer entry point
-  // (langid pair, six stat fields, ppl, scrub) needs the SAME java String
-  // for a row, so decode it once per row per thread and let downstream
-  // memos key on the returned instance (`eq`, not a byte compare). Before
-  // this, each row paid ~4 toString copies + 2 full byte-equals probes.
-  private final class TextMemo(var key: UTF8String, var str: String)
-  private val textMemo = new ThreadLocal[TextMemo] {
-    override def initialValue(): TextMemo = new TextMemo(null, null)
-  }
-
-  /** Canonical String for this row's text: the same instance is returned
-    * for repeated calls with an equal UTF8String (UnsafeRow memory is
-    * reused across rows, hence the defensive key clone).
-    */
-  private def asString(u: UTF8String): String =
-    if (u == null) ""
-    else {
-      val m = textMemo.get()
-      if (m.key == null || !m.key.equals(u)) {
-        m.str = u.toString
-        m.key = u.clone()
-      }
-      m.str
-    }
-
-  private final class Memo(var key: String, var lang: UTF8String, var conf: Double)
+  // ---- last-input memo for `score`. Catalyst pushes `filter(keep)` below
+  // the scoring projections and inlines every `_s.*` field reference into
+  // the Filter, and FilterExec's whole-stage codegen does no subexpression
+  // elimination: one row calls `score` once per inlined field reference,
+  // then once more in the Project above. The memo turns all of those into
+  // one computation per row. It is keyed on a defensive copy of the input
+  // bytes because UnsafeRow memory is reused across rows.
+  private final class Memo(var key: UTF8String, var row: InternalRow)
   private val memo = new ThreadLocal[Memo] {
-    override def initialValue(): Memo = new Memo(null, null, 0.0)
+    override def initialValue(): Memo = new Memo(null, null)
   }
 
-  private def scorePair(u: UTF8String): Memo = {
-    val s = asString(u)
+  /** All rule inputs of one text, in `TurnScores.Schema` field order:
+    * the six TextStats.stats counts, lang, lang_conf, ppl. The text is
+    * decoded once; the returned row is never mutated afterwards.
+    */
+  def score(u: UTF8String): InternalRow = {
     val m = memo.get()
-    if (!(m.key eq s)) {
+    if (m.key == null || !m.key.equals(u)) {
+      val s = u.toString
+      val st = TextStats.stats(s)
       val (lang, conf) = LangId.model.score(s)
-      m.key = s
-      m.lang = UTF8String.fromString(lang)
-      m.conf = conf
+      m.row = new GenericInternalRow(Array[Any](
+        st.cp, st.nWords, st.nBigrams, st.nBigramsDistinct, st.symbols, st.digits,
+        UTF8String.fromString(lang), conf, ByteLM.model.perplexity(s)))
+      m.key = u.clone()
     }
-    m
+    m.row
   }
-
-  def langLabel(u: UTF8String): UTF8String = scorePair(u).lang
-  def langConf(u: UTF8String): Double = scorePair(u).conf
-
-  // ---- one-pass text stats (rule inputs), memoized like the langid pair:
-  // six scalar projections share one TextStats.stats computation per row ----
-  private final class StatsMemo(var key: String, var s: TextStats.Stats)
-  private val statsMemo = new ThreadLocal[StatsMemo] {
-    override def initialValue(): StatsMemo = new StatsMemo(null, null)
-  }
-
-  /** field: 0=cp 1=nWords 2=nBigrams 3=nBigramsDistinct 4=symbols 5=digits */
-  def statField(u: UTF8String, field: Int): Int = {
-    val s = asString(u)
-    val m = statsMemo.get()
-    if (!(m.key eq s)) {
-      m.s = TextStats.stats(s)
-      m.key = s
-    }
-    field match {
-      case 0 => m.s.cp
-      case 1 => m.s.nWords
-      case 2 => m.s.nBigrams
-      case 3 => m.s.nBigramsDistinct
-      case 4 => m.s.symbols
-      case _ => m.s.digits
-    }
-  }
-
-  def ppl(u: UTF8String): Double =
-    ByteLM.model.perplexity(asString(u))
 
   def scrub(u: UTF8String): UTF8String =
-    UTF8String.fromString(Scrub(asString(u)))
+    UTF8String.fromString(Scrub(u.toString))
 
   /** Logical resume-partition id: pmod(pinned-Murmur3(conv_id), nParts)
     * (SURVEY.md §8.6 — label-path hashing never uses Spark's hash()).

@@ -39,7 +39,7 @@ object TextAnalysis {
   /** Language-ID over an arbitrary text table (codegen expression tier). */
   def langIdBreakdown(docs: DataFrame): DataFrame =
     docs.select(col("lang").as("lang_label"),
-      ScoreFns.langIdLabel(coalesce(col("text"), lit(""))).as("lang_pred"))
+      ScoreFns.turnScores(coalesce(col("text"), lit("")))("lang").as("lang_pred"))
       .groupBy("lang_label", "lang_pred").agg(count(lit(1)).as("n"))
 
   /** Whitespace tokens of `text` as an array column — split+filter is

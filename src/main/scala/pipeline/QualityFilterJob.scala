@@ -67,13 +67,7 @@ object QualityFilterJob {
       else turns.filter(!col("part_id").isin(committed.toSeq: _*))
 
     val scored0 = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("conv_id")
-        .orderBy(QualityPipeline.OrderCols.map(col): _*)
-      val withWin = pending
-        .withColumn("_rn", row_number().over(w))
-        .withColumn("_prev_idx", lag("turn_idx", 1).over(w))
-        .withColumn("_prev_role", lag("role", 1).over(w))
+      val withWin = QualityPipeline.withWindow(pending)
       val spread =
         if (salted) withWin.repartition(col("conv_id"), col("turn_idx"))
         else withWin

@@ -2,7 +2,8 @@ package graft
 
 import guards.QualityPipeline
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 import pipeline.SynthStore
@@ -95,6 +96,33 @@ class PlanShapeSpec extends AnyFunSuite {
           .repartition(5, org.apache.spark.sql.functions.col("conv_id")))
       assert(shuffles(QualityPipeline.select(scored)).nonEmpty,
         "repartitioned input must use the generic window path")
+    }
+  }
+
+  test("label-path codegen stages: every generated method below HotSpot's 8,000-byte limit") {
+    // HotSpot's DontCompileHugeMethods never JIT-compiles a method over
+    // 8,000 bytecode bytes, so a fused stage past it runs interpreted
+    // (commit ae050d1 once fixed a rule-hit stage that had reached 8,005)
+    val HugeMethodLimit = 8000
+    val plans = Seq(
+      "select(score(gen)).filter(keep)" -> QualityPipeline.select(
+        QualityPipeline.score(SynthStore(2000L).read(spark).toDF()))
+        .filter(org.apache.spark.sql.functions.col("keep")),
+      "q_pipeline_rulehits" -> SparkEntry.queries("q_pipeline_rulehits")(spark, sf),
+      "q_rulehits_sketch" -> SparkEntry.queries("q_rulehits_sketch")(spark, sf))
+    plans.foreach { case (name, df) =>
+      // planned without AQE so the codegen stages are concrete (the query
+      // closures call Sessions.tune, which turns AQE on at construction)
+      val stages = withoutAqe(df.queryExecution.executedPlan).collect {
+        case w: WholeStageCodegenExec =>
+          w.codegenStageId -> CodeGenerator.compile(w.doCodeGen()._2)._2.maxMethodCodeSize
+      }
+      assert(stages.nonEmpty, s"$name: no whole-stage codegen stage")
+      info(s"$name: largest method ${stages.map(_._2).max} bytes over ${stages.size} stage(s)")
+      val huge = stages.filter(_._2 >= HugeMethodLimit)
+      assert(huge.isEmpty,
+        s"$name: codegen stage(s) with a method of >= $HugeMethodLimit bytes " +
+          s"(stage id -> max method bytes): ${huge.mkString(", ")}")
     }
   }
 
