@@ -77,7 +77,8 @@ object QualityPipeline {
   }
 
   /** Scoring + rules given precomputed window columns (_rn, _prev_idx,
-    * _prev_role). Shared by the Column tier and the salted scale path.
+    * _prev_role). Shared by the Column tier and the production job, which
+    * scores after a range exchange on (part_id, conv_id, turn_idx).
     */
   def scorePostWindow(withWin: DataFrame): DataFrame = {
     val scoredCols = Rules.withStats(withWin)

@@ -6,20 +6,25 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The production job (SURVEY.md §4.1): read → resume-filter → window →
-  * (salted) score → rules → fork into filtered-output sink + per-partition
-  * lineage/rule-hit metrics sink → commit manifest.
+  * range exchange on (part_id, conv_id, turn_idx) → score → rules → fork
+  * into filtered-output sink + per-partition lineage/rule-hit metrics sink
+  * → commit manifest.
   *
   * Scale design (BASELINE.json:6):
   * - logical resume partitions: `pmod(murmur3_32(conv_id), 256)` — decoupled
   *   from shuffle parallelism (SURVEY.md §8.6), so restart granularity is
   *   stable across cluster sizes.
-  * - skew: the window exchange must hash by conv_id (locality for the
-  *   lag/row_number rules), which would make a mega-conversation a straggler
-  *   if scoring ran in the same stage. With `salted=true` the window stage
-  *   computes ONLY the O(1)/row lag columns, then a salted repartition on
-  *   (conv_id, turn_idx) spreads every conversation across all cores for
-  *   the expensive model scoring — per-turn rules no longer need conv
-  *   locality because the window context is already attached to the row.
+  * - the window exchange must hash by conv_id (locality for the
+  *   lag/row_number rules), so the window stage computes ONLY the O(1)/row
+  *   lag columns; per-turn rules no longer need conv locality once that
+  *   context is on the row. The expensive scoring then runs after a range
+  *   exchange on (part_id, conv_id, turn_idx), for two reasons:
+  *   - skew: the key ends in turn_idx, so a range boundary can fall inside
+  *     a conversation and a mega-conversation is spread across tasks
+  *     instead of becoming a straggler;
+  *   - write fan-out: each task holds a contiguous run of part_ids, so the
+  *     partitioned write leaves one file per `part_id=N` directory plus one
+  *     per range boundary, not one per directory per task.
   * - AQE skew handling stays on for the join/agg side (Sessions.tune).
   */
 object QualityFilterJob {
@@ -43,7 +48,6 @@ object QualityFilterJob {
       store: TranscriptStore,
       outDir: String,
       runId: String,
-      salted: Boolean = true,
       inputSnapshot: String = "synth@seed42",
       configSha: String = "rulespec-v1"): Result = {
     val t0 = System.nanoTime()
@@ -66,13 +70,8 @@ object QualityFilterJob {
       if (committed.isEmpty) turns
       else turns.filter(!col("part_id").isin(committed.toSeq: _*))
 
-    val scored0 = {
-      val withWin = QualityPipeline.withWindow(pending)
-      val spread =
-        if (salted) withWin.repartition(col("conv_id"), col("turn_idx"))
-        else withWin
-      QualityPipeline.scorePostWindow(spread)
-    }
+    val scored0 = QualityPipeline.scorePostWindow(QualityPipeline.withWindow(pending)
+      .repartitionByRange(col("part_id"), col("conv_id"), col("turn_idx")))
     // ---- SINGLE pass: the kept-output write is the only job over the
     // scored corpus; per-partition lineage/rule metrics and the commit
     // stats ride the same pass via observe() (PartitionMetricsAgg), so the
@@ -87,6 +86,7 @@ object QualityFilterJob {
         col("lang_conf"), col("ppl"))
       .write.mode(SaveMode.Overwrite).partitionBy("part_id")
       .option("partitionOverwriteMode", "dynamic")
+      .options(NioLocalFileSystem.writeOptions)
       .parquet(s"$outDir/kept")
 
     val flat: Map[String, Long] = obs.get("pm") match {
@@ -120,13 +120,15 @@ object QualityFilterJob {
       metricRows.toDF(metricsSchemaCols: _*)
         .write.mode(SaveMode.Overwrite).partitionBy("partition_id")
         .option("partitionOverwriteMode", "dynamic")
+        .options(NioLocalFileSystem.writeOptions)
         .parquet(s"$outDir/metrics")
     } else if (!fs.exists(metricsPath)) {
       // zero rows processed on a fresh dir: still create the metrics path
       // (an empty typed table) so downstream readers never hit missing-path;
       // when prior metrics exist they are left untouched
       metricRows.toDF(metricsSchemaCols: _*)
-        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/metrics")
+        .write.mode(SaveMode.Overwrite).options(NioLocalFileSystem.writeOptions)
+        .parquet(s"$outDir/metrics")
     }
 
     // ---- commit: all pending partitions that produced rows

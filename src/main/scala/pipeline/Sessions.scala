@@ -11,7 +11,7 @@ object Sessions {
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
       // AQE fixes join/agg skew at runtime; compute skew from
-      // mega-conversations is handled by the salted repartition in
+      // mega-conversations is handled by the range exchange in
       // QualityFilterJob (AQE cannot re-split an opaque compute stage)
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> (32L * 1024 * 1024).toString)

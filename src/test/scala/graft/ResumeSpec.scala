@@ -1,9 +1,29 @@
 package graft
 
+import java.io.File
 import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
+import core.{GenConvFlat, Turn}
+import guards.QualityPipeline
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{LocalFileSystem, Path => HPath}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import pipeline.{Manifest, QualityFilterJob, SynthStore}
+import pipeline.{Manifest, NioLocalFileSystem, QualityFilterJob, SynthStore, TranscriptStore}
+
+/** The planted mega-conversation `SynthGen.genConv(0, 600000)` (16,666
+  * turns) plus generator ordinals 1–60, as one store.
+  */
+object MegaStore extends TranscriptStore {
+  def read(spark: SparkSession): Dataset[Turn] = {
+    import spark.implicits._
+    spark.range(0L, 61L).mapPartitions(new GenConvFlat(600000L))
+      .select("conv_id", "turn_idx", "role", "text", "tool", "ts")
+      .as(Encoders.product[Turn])
+  }
+}
 
 /** Suite (f) of SURVEY.md §6.3: idempotent partition-granular resume.
   * Simulates a run killed after k partition commits by tampering a
@@ -93,6 +113,59 @@ class ResumeSpec extends AnyFunSuite {
       assert(m.count() == 0)
       assert(QualityFilterJob.metricsSchemaCols.toSet.subsetOf(m.columns.toSet))
     } finally deleteRec(java.nio.file.Paths.get(dir))
+  }
+
+  test("kept output is clustered by part_id and the mega-conversation is still spread") {
+    val dir = Files.createTempDirectory("graft_layout").toString
+    try {
+      QualityFilterJob.run(spark, MegaStore, dir, "runL")
+      val partDirs = new File(s"$dir/kept").listFiles().filter(_.getName.startsWith("part_id="))
+      def files(d: File): Int = d.listFiles().count(_.getName.startsWith("part-"))
+      val nFiles = partDirs.map(files).sum
+      val shuffle = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      // one file per directory, plus at most one per range boundary
+      assert(nFiles <= partDirs.size + shuffle - 1,
+        s"$nFiles kept files in ${partDirs.size} part_id dirs, $shuffle shuffle partitions")
+
+      val megaPart = guards.expr.Scorers.convPartId(
+        org.apache.spark.unsafe.types.UTF8String.fromString("c00000000"),
+        QualityFilterJob.LogicalPartitions)
+      val megaFiles = files(new File(s"$dir/kept/part_id=$megaPart"))
+      assert(megaFiles >= 2, s"mega-conversation written by $megaFiles task(s)")
+
+      def rows(df: DataFrame): Seq[(String, Int, String)] =
+        df.select("conv_id", "turn_idx", "scrubbed_text").collect().toSeq
+          .map(r => (r.getString(0), r.getInt(1), r.getString(2))).sortBy(r => (r._1, r._2))
+      val want = rows(QualityPipeline.score(MegaStore.read(spark).toDF()).filter(col("keep")))
+      assert(want.nonEmpty)
+      assert(rows(spark.read.parquet(s"$dir/kept")) == want)
+    } finally deleteRec(java.nio.file.Paths.get(dir))
+  }
+
+  test("NioLocalFileSystem leaves the permissions the stock local file system leaves") {
+    // the same create/mkdirs/setPermission calls through each file system;
+    // every file and directory must end with the same mode
+    def modes(fs: LocalFileSystem): Map[String, String] = {
+      val root = Files.createTempDirectory("graft_fsperm")
+      try {
+        fs.initialize(java.net.URI.create("file:///"), new Configuration())
+        def at(rel: String) = new HPath(root.toUri.toString, rel)
+        fs.mkdirs(at("a/b"))
+        fs.create(at("a/b/default.bin")).close()
+        fs.create(at("a/c/mode640.bin"), new FsPermission("640"), true, 4096,
+          1.toShort, 1L << 20, null).close()
+        fs.setPermission(at("a"), new FsPermission("750"))
+        Files.walk(root).iterator().asScala.filter(_ != root).map { p =>
+          root.relativize(p).toString ->
+            java.nio.file.attribute.PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+        }.toMap
+      } finally deleteRec(root)
+    }
+    val stock = modes(new LocalFileSystem())
+    assert(stock.keySet == Set("a", "a/b", "a/b/default.bin", "a/b/.default.bin.crc",
+      "a/c", "a/c/mode640.bin", "a/c/.mode640.bin.crc"))
+    assert(stock("a") == "rwxr-x---" && stock("a/c/mode640.bin") == "rw-r-----")
+    assert(modes(new NioLocalFileSystem) == stock)
   }
 
   test("manifest round-trips") {
